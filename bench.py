@@ -224,21 +224,13 @@ PRIMARY_INPUT = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
+    from mapreduce_lab_spark import registry, session
 
-    from mapreduce_lab_spark import registry
-
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("mapreduce_lab_spark-bench")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        # \r progress lines interleaved with the metric line overflowed
-        # the driver's stdout tail buffer in round 2 (parsed: null).
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .getOrCreate()
+    # The session the tests verify; it also keeps console progress
+    # lines out of stdout, where in round 2 they pushed the metric line
+    # out of the captured tail (parsed: null).
+    spark = session.get_spark(
+        "mapreduce_lab_spark-bench", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS)
     )
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -14,7 +14,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# The directory holding this package, for the Python workers' path.
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -35,12 +36,21 @@ def get_spark(
     - Arrow for all Python exchange paths (Pandas UDFs, toPandas).
     - UTC session timezone so timestamp semantics are stable across
       driver/executor locales (and match the DuckDB oracle).
+    - Python workers fork from ``worker_daemon``, which stops each
+      reused worker from re-reading ``pyspark.zip``'s directory before
+      every task (CPython < 3.13): 0.16-0.32 s of worker CPU per task
+      before, 0.01-0.06 s after, on a 4-CPU VM. The package's parent
+      directory is appended to the workers' ``PYTHONPATH`` so the
+      daemon, and any closure that references the package, imports
+      from any driver cwd.
+    - No console progress bars: their carriage-return lines interleave
+      with output that callers parse from stdout.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = DEFAULT_SHUFFLE_PARTITIONS
+        shuffle_partitions = int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -52,7 +62,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.daemon.module", "mapreduce_lab_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -30,17 +30,9 @@ CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 def main() -> None:
     suffix = sys.argv[1]
     names = sys.argv[2:]
-    from pyspark.sql import SparkSession
+    from mapreduce_lab_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{CPUS}]")
-        .appName("plan-capture")
-        .config("spark.sql.shuffle.partitions", CPUS)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.ui.showConsoleProgress", "false")
-        .getOrCreate()
-    )
+    spark = get_spark("plan-capture", master=f"local[{CPUS}]", shuffle_partitions=int(CPUS))
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
     if not names:
